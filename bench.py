@@ -33,6 +33,7 @@ from db_converter_spark.benchutil import (
     gc_drain,
     read_steal_ticks,
     reset_cross_query_memos,
+    steal_delta,
 )
 from db_converter_spark.registry import all_queries
 from db_converter_spark.session import build_session
@@ -160,7 +161,7 @@ def main() -> int:
             t0 = time.perf_counter()
             queries[name].builder(spark, sf_dir).collect()
             samples.append(time.perf_counter() - t0)
-            stl.append(read_steal_ticks() - s0)
+            stl.append(steal_delta(s0, read_steal_ticks()))
         steal_by[name] = stl  # parallel to UNSORTED samples order
         samples.sort()
         samples_by[name] = samples
@@ -255,7 +256,7 @@ def main() -> int:
     # (medians included) FIRST — it may be clipped — and finish with ONE
     # compact line carrying the best-of dict + totals, sized to survive
     # the capture window intact.
-    steal_total = read_steal_ticks() - steal_t0 if steal_t0 >= 0 else -1
+    steal_total = steal_delta(steal_t0, read_steal_ticks())
     try:
         load1_end = round(os.getloadavg()[0], 1)
     except OSError:

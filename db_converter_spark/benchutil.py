@@ -106,6 +106,12 @@ def read_steal_ticks() -> int:
         return -1
 
 
+def steal_delta(start: int, end: int) -> int:
+    """Steal ticks between two :func:`read_steal_ticks` reads; the -1
+    sentinel when either read failed."""
+    return -1 if start < 0 or end < 0 else end - start
+
+
 def build_compact_line(
     timings: dict,
     medians: dict,

@@ -97,20 +97,14 @@ def create_information_schema_views(spark: SparkSession, db: str | None = None) 
     (reference: packets/test_int4_to_int8/01_step.sql:5-7).
 
     Builds ``information_schema_columns`` (table_schema, table_name,
-    column_name, data_type, ordinal_position) from the live Spark catalog;
-    the PG-dialect rewriter maps ``information_schema.columns`` onto it.
-    Driver-side listing — catalogs are metadata, not data."""
+    column_name, data_type, ordinal_position) over the tables and views of
+    ``db`` from one catalog snapshot (pg_catalog.CatalogSnapshot); the
+    PG-dialect rewriter maps ``information_schema.columns`` onto it.
+    Driver-side metadata — catalogs are metadata, not data."""
+    from db_converter_spark.pg_catalog import CatalogSnapshot, build_views
+
     db = db or spark.catalog.currentDatabase()
-    rows = []
-    for t in spark.catalog.listTables(db):
-        if t.tableType == "TEMPORARY":
-            continue
-        for i, c in enumerate(spark.catalog.listColumns(t.name, db)):
-            rows.append((db, t.name, c.name, c.dataType, i + 1))
-    schema = "table_schema string, table_name string, column_name string, data_type string, ordinal_position int"
-    spark.createDataFrame(rows, schema).createOrReplaceTempView(
-        "information_schema_columns"
-    )
+    build_views(spark, CatalogSnapshot(spark, [db]), {"information_schema_columns"})
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -68,6 +68,13 @@ INDEX_PROP_PREFIX = "dbc.index."
 DEFAULT_PROP_PREFIX = "dbc.default."
 
 
+def prop_literal(text: str) -> str:
+    """``text`` as a double-quoted Spark SQL string literal for
+    TBLPROPERTIES — safe for values holding quotes (``nextval('s')``,
+    recorded index JSON)."""
+    return '"' + text.replace("\\", "\\\\").replace('"', '\\"') + '"'
+
+
 def _unquote(ident: str) -> str:
     return ident.strip().strip('`"')
 
@@ -140,8 +147,8 @@ def _alter_default(
     if expr is None:
         spark.sql(f"ALTER TABLE {q} UNSET TBLPROPERTIES IF EXISTS ('{prop}')")
     else:
-        val = expr.strip().rstrip(";").replace("\\", "\\\\").replace('"', '\\"')
-        spark.sql(f'ALTER TABLE {q} SET TBLPROPERTIES ("{prop}" = "{val}")')
+        val = prop_literal(expr.strip().rstrip(";"))
+        spark.sql(f'ALTER TABLE {q} SET TBLPROPERTIES ("{prop}" = {val})')
         notices.append(
             ("LOG", f"default for {q}.{col} recorded driver-side ({prop})")
         )
@@ -166,7 +173,8 @@ def _vacuum(
         from db_converter_spark.operators.migration import _swap_write
         from db_converter_spark.pg_catalog import _table_stats
 
-        size, _ = _table_stats(spark, q)
+        rel = _table_stats(spark, q)
+        size = rel.size if rel is not None else None
         nparts = max(1, int((size or 0) // _TARGET_FILE_BYTES) + 1)
         _swap_write(spark, q, spark.table(q).coalesce(nparts))
         notices.append(("LOG", f"vacuum full: rewrote {q} into {nparts} file group(s)"))
@@ -239,17 +247,22 @@ def _analyze(
     return ["ANALYZE"], []
 
 
+def indexes_from_props(props: dict[str, str]) -> dict[str, dict]:
+    """Recorded index definitions in one table's TBLPROPERTIES: {name: spec}."""
+    return {
+        k[len(INDEX_PROP_PREFIX):]: json.loads(v)
+        for k, v in props.items()
+        if k.startswith(INDEX_PROP_PREFIX)
+    }
+
+
 def list_indexes(spark: SparkSession, qualified_table: str) -> dict[str, dict]:
     """Recorded index definitions on one table: {name: spec}."""
     try:
         rows = spark.sql(f"SHOW TBLPROPERTIES {qualified_table}").collect()
     except Exception:  # noqa: BLE001 — views/temp tables hold no indexes
         return {}
-    out: dict[str, dict] = {}
-    for r in rows:
-        if r["key"].startswith(INDEX_PROP_PREFIX):
-            out[r["key"][len(INDEX_PROP_PREFIX):]] = json.loads(r["value"])
-    return out
+    return indexes_from_props({r["key"]: r["value"] for r in rows})
 
 
 def _create_index(

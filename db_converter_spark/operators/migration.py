@@ -186,7 +186,9 @@ def _swap_write(spark: SparkSession, table: str, df: DataFrame) -> None:
 
     User TBLPROPERTIES (reloptions, recorded index definitions) are carried
     over — PG's rewrite paths (VACUUM FULL, table rewrites) preserve storage
-    parameters and indexes, so the swap must too."""
+    parameters and indexes, so the swap must too. A failure before the
+    rename drops the sibling, leaving ``table`` as it was."""
+    from db_converter_spark.operators.maintenance import prop_literal
     from db_converter_spark.pg_catalog import _INTERNAL_PROP_RE
 
     tmp, bak = f"{table}__swap_tmp", f"{table}__swap_old"
@@ -201,14 +203,18 @@ def _swap_write(spark: SparkSession, table: str, df: DataFrame) -> None:
     except Exception:  # noqa: BLE001 — fresh table, nothing to carry
         props = {}
     spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    df.write.saveAsTable(tmp)
-    if props:
-        kv = ", ".join(
-            f"'{k}' = '{v}'".replace("\\", "\\\\")
-            for k, v in sorted(props.items())
-        )
-        spark.sql(f"ALTER TABLE {tmp} SET TBLPROPERTIES ({kv})")
-    spark.sql(f"DROP TABLE IF EXISTS {bak}")
+    try:
+        df.write.saveAsTable(tmp)
+        if props:
+            kv = ", ".join(
+                f"{prop_literal(k)} = {prop_literal(v)}"
+                for k, v in sorted(props.items())
+            )
+            spark.sql(f"ALTER TABLE {tmp} SET TBLPROPERTIES ({kv})")
+        spark.sql(f"DROP TABLE IF EXISTS {bak}")
+    except Exception:
+        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+        raise
     spark.sql(f"ALTER TABLE {table} RENAME TO {bak}")
     spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
     spark.sql(f"DROP TABLE {bak}")

@@ -16,11 +16,34 @@ mappings:
   Spark/parquet bookkeeping properties are filtered out; NULL when no
   user options (PG semantics: NULL, not an empty array — containment
   predicates must not match optionless tables);
-- *relpages / reltuples*: from ANALYZE statistics when present (DESCRIBE
-  EXTENDED ``Statistics`` row), else file sizes listed from the table
-  location; -1 reltuples when unknown, exactly PG's "never analyzed";
+- *relpages / reltuples*: from ANALYZE statistics when present, else file
+  sizes listed from the table location; -1 reltuples when unknown, exactly
+  PG's "never analyzed";
 - *pg_stat_all_tables*: n_live_tup from the same stats; the MVCC counters
   (n_dead_tup, n_tup_ins/upd/hot_upd) are 0 — parquet has no dead tuples.
+
+How a refresh reads the catalog:
+
+- *one read per relation*: each database is listed once (``SHOW TABLES
+  IN db``) and each relation is read once with ``DESCRIBE TABLE EXTENDED
+  … AS JSON`` (:func:`_table_stats`), which answers type, columns,
+  TBLPROPERTIES, statistics and location together. That one
+  :class:`CatalogSnapshot` feeds pg_class, pg_attribute, pg_type,
+  pg_index, pg_stats, the size and index lookup UDFs and
+  information_schema_columns;
+- *demand-driven*: :func:`refresh_emulation` builds only the relations
+  and lookup UDFs it is given — the packet runner passes the emulated
+  names its packet's SQL mentions (:func:`names_in` over the steps,
+  run_once and generators). Per-column statistics (one ``DESCRIBE`` per
+  column) are read only when pg_stats is named; the instance views only
+  when one of them is;
+- *everything, when the SQL is unknown*: a packet with a py step and an
+  explicit ``ctx.refresh_catalog()`` build the full set; the public
+  ``create_*_views`` functions each build all of their own views;
+- *a snapshot per refresh*: nothing is cached across refreshes, so there
+  is nothing to invalidate. PG's catalog is live; these views are as of
+  the last refresh (py-steps that create tables and then introspect them
+  call ``ctx.refresh_catalog()`` in between).
 
 Everything here is driver-side catalog metadata (small N); no Spark jobs
 are launched except the optional per-table file listing, which is a
@@ -29,11 +52,17 @@ filesystem stat, not a scan.
 
 from __future__ import annotations
 
+import json
 import re
 import zlib
+from dataclasses import dataclass, field
+from functools import cache, cached_property
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Spark simpleString -> PG typname (pg_type join key in the packets)
 _PG_TYPNAME = {
@@ -58,11 +87,13 @@ _INTERNAL_PROP_RE = re.compile(
     re.I,
 )
 
-_STATS_RE = re.compile(r"([\d,]+)\s+bytes(?:,\s*([\d,]+)\s+rows)?")
-
 
 def _oid(name: str) -> int:
     return zlib.crc32(name.encode())
+
+
+def _quote(ident: str) -> str:
+    return "`" + ident.replace("`", "``") + "`"
 
 
 def _prop_ts(props: dict, key: str):
@@ -93,28 +124,70 @@ def _pg_typname(spark_type: str) -> str:
     return _PG_TYPNAME.get(base, base)
 
 
-def _table_stats(spark: SparkSession, qualified: str) -> tuple[int | None, int | None]:
-    """(size_bytes, row_count) from DESCRIBE EXTENDED; either may be None.
-    Falls back to a filesystem listing of the table location for bytes."""
-    size = rows = None
-    location = None
+def _type_string(t: dict) -> str:
+    """Spark ``simpleString`` of a ``DESCRIBE … AS JSON`` type object — the
+    spelling ``spark.catalog.listColumns`` reports as ``dataType``."""
+    name = t["name"]
+    if name == "decimal":
+        return f"decimal({t['precision']},{t['scale']})"
+    if name == "array":
+        return f"array<{_type_string(t['element_type'])}>"
+    if name == "map":
+        return f"map<{_type_string(t['key_type'])},{_type_string(t['value_type'])}>"
+    if name == "struct":
+        fields = ",".join(f"{f['name']}:{_type_string(f['type'])}" for f in t["fields"])
+        return f"struct<{fields}>"
+    if name == "interval":
+        start, end = t["start_unit"], t["end_unit"]
+        return f"interval {start}" if start == end else f"interval {start} to {end}"
+    if t.get("collation", "UTF8_BINARY") != "UTF8_BINARY":
+        return f"{name} collate {t['collation']}"
+    if "length" in t:  # char/varchar kept as declared
+        return f"{name}({t['length']})"
+    return "timestamp" if name == "timestamp_ltz" else name
+
+
+@dataclass
+class Relation:
+    """One catalog relation as :func:`_table_stats` read it."""
+
+    db: str
+    name: str
+    is_view: bool
+    columns: list[tuple[str, str]]  # (name, Spark simpleString type)
+    props: dict[str, str]  # TBLPROPERTIES
+    size: int | None  # bytes
+    rows: int | None
+
+
+def _table_stats(spark: SparkSession, qualified: str) -> Relation | None:
+    """The one metadata read per relation: ``DESCRIBE TABLE EXTENDED … AS
+    JSON`` gives its type, columns, TBLPROPERTIES and ANALYZE statistics.
+    Without statistics, bytes fall back to a filesystem listing of the table
+    location. None when the relation cannot be described (dropped since the
+    listing)."""
     try:
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {qualified}").collect():
-            if r[0] == "Statistics":
-                m = _STATS_RE.search(r[1] or "")
-                if m:
-                    size = int(m.group(1).replace(",", ""))
-                    if m.group(2):
-                        rows = int(m.group(2).replace(",", ""))
-            elif r[0] == "Location":
-                location = r[1]
-    except Exception:  # noqa: BLE001 — view/temp relations have no EXTENDED
-        return None, None
+        info = json.loads(
+            spark.sql(f"DESCRIBE TABLE EXTENDED {qualified} AS JSON").first()[0]
+        )
+    except Exception:  # noqa: BLE001
+        return None
+    stats = info.get("statistics") or {}
+    size, rows = stats.get("size_in_bytes"), stats.get("num_rows")
+    location = info.get("location")
     if size is None and location and location.startswith("file:"):
         p = Path(location[5:])
         if p.exists():
             size = sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
-    return size, rows
+    return Relation(
+        db=info["schema_name"],
+        name=info["table_name"],
+        is_view=info.get("type") == "VIEW",
+        columns=[(c["name"], _type_string(c["type"])) for c in info["columns"]],
+        props=info.get("table_properties") or {},
+        size=size,
+        rows=rows,
+    )
 
 
 def _column_stats(spark: SparkSession, qualified: str, col: str) -> tuple:
@@ -122,7 +195,9 @@ def _column_stats(spark: SparkSession, qualified: str, col: str) -> tuple:
     metadata; Nones when the column was never analyzed."""
     nulls = avg_len = distinct = None
     try:
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {qualified} {col}").collect():
+        for r in spark.sql(
+            f"DESCRIBE TABLE EXTENDED {qualified} {_quote(col)}"
+        ).collect():
             k = (r[0] or "").lower()
             v = r[1]
             if v in (None, "NULL"):
@@ -138,100 +213,107 @@ def _column_stats(spark: SparkSession, qualified: str, col: str) -> tuple:
     return nulls, avg_len, distinct
 
 
-def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -> None:
-    """(Re)build the pg_catalog temp views over ``dbs`` (default: the
-    session's current database). Call again after DDL to refresh — PG's
-    catalog is live, these views are a snapshot (documented gap).
+@dataclass
+class _Rows:
+    """Emulation rows derived from one snapshot's relations."""
 
-    Also registers metadata-lookup SQL functions the packets call with oids
-    (``pg_get_indexdef``, ``pg_relation_size``, ``pg_table_size``) — each
-    closes over a dict built here; catalogs are driver-side metadata, the
-    lookups never touch executors with more than a broadcast-size map."""
-    from db_converter_spark.operators.maintenance import list_indexes
+    cls: list = field(default_factory=list)
+    att: list = field(default_factory=list)
+    stat: list = field(default_factory=list)
+    idx: list = field(default_factory=list)
+    info_columns: list = field(default_factory=list)
+    indexdefs: dict = field(default_factory=dict)
+    relsizes: dict = field(default_factory=dict)
+    idx_size_by_table: dict = field(default_factory=dict)
 
-    dbs = dbs or [spark.catalog.currentDatabase()]
-    ns_rows: list[tuple] = []
-    cls_rows: list[tuple] = []
-    att_rows: list[tuple] = []
-    stat_rows: list[tuple] = []
-    idx_rows: list[tuple] = []
-    pgstats_rows: list[tuple] = []
-    indexdefs: dict[int, str] = {}
-    relsizes: dict[int, int] = {}
-    for db in dbs:
-        ns_oid = _oid(db)
-        ns_rows.append((ns_oid, db))
-        for t in spark.catalog.listTables(db):
-            if t.tableType == "TEMPORARY" or t.tableType == "VIEW":
-                continue
-            qualified = f"{db}.{t.name}"
-            oid = _oid(qualified)
-            try:
-                props = {
-                    r["key"]: r["value"]
-                    for r in spark.sql(f"SHOW TBLPROPERTIES {qualified}").collect()
-                }
-            except Exception:  # noqa: BLE001
-                props = {}
+
+class CatalogSnapshot:
+    """The catalog of ``dbs`` as of one refresh: every relation read once
+    (temp views excluded), everything else derived from those reads. Reads
+    happen on first use, so a build that names only instance views or
+    static relations reads no relation at all."""
+
+    def __init__(self, spark: SparkSession, dbs: list[str]):
+        self.spark = spark
+        self.dbs = list(dbs)
+
+    @property
+    def namespaces(self) -> list[tuple]:
+        return [(_oid(db), db) for db in self.dbs]
+
+    @cached_property
+    def relations(self) -> list[Relation]:
+        out = []
+        for db in self.dbs:
+            for t in self.spark.sql(f"SHOW TABLES IN {_quote(db)}").collect():
+                if t.isTemporary:
+                    continue
+                rel = _table_stats(self.spark, f"{_quote(db)}.{_quote(t.tableName)}")
+                if rel is not None:
+                    out.append(rel)
+        return out
+
+    @property
+    def tables(self) -> list[Relation]:
+        return [r for r in self.relations if not r.is_view]
+
+    @cached_property
+    def rows(self) -> _Rows:
+        from db_converter_spark.operators.maintenance import indexes_from_props
+
+        out = _Rows()
+        for rel in self.relations:
+            out.info_columns.extend(
+                (rel.db, rel.name, c, dtype, i + 1)
+                for i, (c, dtype) in enumerate(rel.columns)
+            )
+        for rel in self.tables:
+            db, name, props, size, nrows = rel.db, rel.name, rel.props, rel.size, rel.rows
+            ns_oid, oid = _oid(db), _oid(f"{db}.{name}")
             reloptions = [
                 f"{k}={v}"
                 for k, v in sorted(props.items())
                 if not _INTERNAL_PROP_RE.match(k)
             ] or None
-            size, nrows = _table_stats(spark, qualified)
             relpages = (size or 0) // 8192
             reltuples = float(nrows) if nrows is not None else -1.0
-            relsizes[oid] = size or 0
-            idx_props = {
-                k[len("dbc.index."):]: v
-                for k, v in props.items()
-                if k.startswith("dbc.index.")
-            }
-            cls_rows.append(
-                (oid, t.name, ns_oid, "r", reltuples, relpages, reloptions,
-                 0, 0, bool(idx_props), 0, 0)
+            out.relsizes[oid] = size or 0
+            indexes = indexes_from_props(props)
+            out.cls.append(
+                (oid, name, ns_oid, "r", reltuples, relpages, reloptions,
+                 0, 0, bool(indexes), 0, 0)
             )
-            stat_rows.append(
-                (oid, db, t.name, nrows if nrows is not None else 0, 0, 0, 0, 0,
+            out.stat.append(
+                (oid, db, name, nrows if nrows is not None else 0, 0, 0, 0, 0,
                  # scan counters: Spark's scheduler keeps no per-table scan
                  # totals — identically 0 (documented structural gap)
                  0, 0, 0, 0,
                  _prop_ts(props, "dbc.last_vacuum"), None,
                  _prop_ts(props, "dbc.last_analyze"), None)
             )
-            colnums: dict[str, int] = {}
-            for i, c in enumerate(spark.catalog.listColumns(qualified)):
-                colnums[c.name] = i + 1
-                att_rows.append(
-                    (oid, c.name, i + 1, _pg_typname(c.dataType), False)
-                )
-                nulls, avg_len, distinct = _column_stats(spark, qualified, c.name)
-                if avg_len is not None or nulls is not None:
-                    null_frac = (
-                        float(nulls) / float(nrows)
-                        if nulls is not None and nrows
-                        else 0.0
-                    )
-                    pgstats_rows.append(
-                        (db, t.name, c.name, False, null_frac,
-                         avg_len if avg_len is not None else 0,
-                         float(distinct) if distinct is not None else -1.0)
-                    )
+            colnums = {c: i + 1 for i, (c, _) in enumerate(rel.columns)}
+            out.att.extend(
+                (oid, c, i + 1, _pg_typname(dtype), False)
+                for i, (c, dtype) in enumerate(rel.columns)
+            )
             # Recorded secondary-index definitions (operators/maintenance.py):
             # Spark scans prune via stats/partitioning, the DEFINITIONS are
             # catalog metadata — exactly the surface pg_index readers need.
             ncols = max(1, len(colnums))
-            for iname, spec in list_indexes(spark, qualified).items():
+            for iname, spec in indexes.items():
                 ioid = _oid(f"{db}.{iname}")
                 icols = [c for c in spec["cols"] if c in colnums]
                 # size estimate: the indexed columns' share of the table
                 ipages = relpages * max(1, len(icols)) // ncols
-                cls_rows.append(
+                out.cls.append(
                     (ioid, iname, ns_oid, "i", reltuples, ipages, None,
                      _oid(spec["method"]), 0, False, 0, 0)
                 )
-                relsizes[ioid] = (size or 0) * max(1, len(icols)) // ncols
-                idx_rows.append(
+                out.relsizes[ioid] = (size or 0) * max(1, len(icols)) // ncols
+                out.idx_size_by_table[oid] = (
+                    out.idx_size_by_table.get(oid, 0) + out.relsizes[ioid]
+                )
+                out.idx.append(
                     (ioid, oid, len(icols),
                      [colnums[c] for c in icols],
                      [colnums[c] for c in icols],
@@ -239,128 +321,41 @@ def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -
                      bool(spec.get("unique")), False, True, True)
                 )
                 cols_sql = ", ".join(icols)
-                indexdefs[ioid] = (
+                out.indexdefs[ioid] = (
                     f"CREATE {'UNIQUE ' if spec.get('unique') else ''}INDEX {iname}"
-                    f" ON {db}.{t.name} USING {spec['method']} ({cols_sql})"
+                    f" ON {db}.{name} USING {spec['method']} ({cols_sql})"
                 )
+        return out
 
-    spark.createDataFrame(ns_rows, "oid bigint, nspname string").createOrReplaceTempView(
-        "pg_namespace"
-    )
-    spark.createDataFrame(
-        cls_rows,
-        "oid bigint, relname string, relnamespace bigint, relkind string,"
-        " reltuples double, relpages bigint, reloptions array<string>,"
-        " relam bigint, reltoastrelid bigint, relhasindex boolean,"
-        # frozen-xid ages are identically 0: parquet is copy-on-write, no
-        # MVCC wraparound exists, so age-based alerts correctly never fire
-        " relfrozenxid bigint, relminmxid bigint",
-    ).createOrReplaceTempView("pg_class")
-    spark.createDataFrame(
-        att_rows,
-        "attrelid bigint, attname string, attnum int, atttypid string,"
-        # parquet never carries dropped-column tombstones
-        " attisdropped boolean",
-    ).createOrReplaceTempView("pg_attribute")
-    typ = sorted({r[3] for r in att_rows})
-    spark.createDataFrame(
-        [(t, t) for t in typ] or [("text", "text")], "oid string, typname string"
-    ).createOrReplaceTempView("pg_type")
-    spark.createDataFrame(
-        stat_rows,
-        "relid bigint, schemaname string, relname string, n_live_tup bigint,"
-        " n_dead_tup bigint, n_tup_ins bigint, n_tup_upd bigint, n_tup_hot_upd bigint,"
-        " seq_scan bigint, seq_tup_read bigint, idx_scan bigint, idx_tup_fetch bigint,"
-        " last_vacuum timestamp, last_autovacuum timestamp,"
-        " last_analyze timestamp, last_autoanalyze timestamp",
-    ).createOrReplaceTempView("pg_stat_all_tables")
-    idx_stat_df = spark.createDataFrame(
-        [(r[0], r[1], 0) for r in idx_rows],
-        "indexrelid bigint, relid bigint, idx_scan bigint",
-    )
-    idx_stat_df.createOrReplaceTempView("pg_stat_all_indexes")
-    # user-relations variant: identical here (no system catalogs on disk)
-    idx_stat_df.createOrReplaceTempView("pg_stat_user_indexes")
-    # `indkey` is the int2vector itself (ARRAY — PG's `= any(indkey)` and
-    # 0-based `indkey[n]` subscripts work verbatim); `indkey_str` keeps the
-    # PG ::text rendering ('1 2'); `indkey_arr` is the legacy port alias.
-    _IDX_SCHEMA = (
-        "indexrelid bigint, indrelid bigint, indnatts int, indkey_arr array<int>,"
-        " indkey array<int>, indkey_str string, indisunique boolean,"
-        " indisprimary boolean, indisvalid boolean, indisready boolean"
-    )
-    spark.createDataFrame(idx_rows or [], _IDX_SCHEMA).createOrReplaceTempView(
-        "pg_index"
-    )
-    spark.createDataFrame(
-        [(_oid(m), m) for m in ("btree", "hash", "gist", "gin", "brin")],
-        "oid bigint, amname string",
-    ).createOrReplaceTempView("pg_am")
-    # No PK/FK/unique constraints exist on parquet tables — typed empty view
-    # so constraint-reading packets (dba_idx_diag 03/06) run and report none.
-    spark.createDataFrame(
-        [],
-        "oid bigint, conname string, contype string, connamespace bigint,"
-        " conindid bigint, conrelid bigint, confrelid bigint,"
-        " conkey array<int>, confkey array<int>,"
-        " confupdtype string, confdeltype string",
-    ).createOrReplaceTempView("pg_constraint")
-    spark.createDataFrame(
-        pgstats_rows or [],
-        "schemaname string, tablename string, attname string, inherited boolean,"
-        " null_frac double, avg_width int, n_distinct double",
-    ).createOrReplaceTempView("pg_stats")
-
-    # per-table index-size totals (estimates): oid(table) → sum(index sizes)
-    idx_size_by_table: dict[int, int] = {}
-    for r in idx_rows:
-        idx_size_by_table[r[1]] = idx_size_by_table.get(r[1], 0) + relsizes.get(
-            r[0], 0
-        )
-
-    def _pg_get_indexdef(oid):  # noqa: ANN001 — Spark UDF
-        return indexdefs.get(oid)
-
-    def _pg_relation_size(oid):  # noqa: ANN001
-        return relsizes.get(oid, 0)
-
-    def _pg_indexes_size(oid):  # noqa: ANN001
-        return idx_size_by_table.get(oid, 0)
-
-    def _pg_total_relation_size(oid):  # noqa: ANN001
-        return relsizes.get(oid, 0) + idx_size_by_table.get(oid, 0)
-
-    spark.udf.register("pg_get_indexdef", _pg_get_indexdef, "string")
-    spark.udf.register("pg_relation_size", _pg_relation_size, "bigint")
-    spark.udf.register("pg_table_size", _pg_relation_size, "bigint")
-    spark.udf.register("pg_indexes_size", _pg_indexes_size, "bigint")
-    spark.udf.register("pg_total_relation_size", _pg_total_relation_size, "bigint")
-    # no constraints exist on parquet tables — NULL, like PG for unknown oid
-    spark.udf.register("pg_get_constraintdef", lambda oid: None, "string")
+    @cached_property
+    def pg_stats_rows(self) -> list[tuple]:
+        """One ``DESCRIBE … <col>`` per table column — read only when
+        pg_stats is built."""
+        out = []
+        for rel in self.tables:
+            qualified = f"{_quote(rel.db)}.{_quote(rel.name)}"
+            for c, _ in rel.columns:
+                nulls, avg_len, distinct = _column_stats(self.spark, qualified, c)
+                if avg_len is None and nulls is None:
+                    continue
+                null_frac = (
+                    float(nulls) / float(rel.rows) if nulls is not None and rel.rows else 0.0
+                )
+                out.append(
+                    (rel.db, rel.name, c, False, null_frac,
+                     avg_len if avg_len is not None else 0,
+                     float(distinct) if distinct is not None else -1.0)
+                )
+        return out
 
 
-def create_pg_instance_views(spark: SparkSession) -> None:
-    """Instance-level introspection views: pg_database / pg_settings /
-    pg_stat_activity / pg_locks / pg_stat_replication.
+# -------------------------------------------------------- instance rows
 
-    Mappings (shape parity; each gap is structural, not an omission):
 
-    - *pg_database*: Spark catalog databases; frozen-xid ages are 0 —
-      parquet has no wraparound, so age-based alerts correctly never fire;
-    - *pg_settings*: the session's SQL confs (``SET -v``) — name/setting/
-      unit/boot_val shaped; byte-valued Spark confs get unit='B';
-    - *pg_stat_activity*: one row per active Spark job from the status
-      tracker — pid=jobId, state='active'; queries/xids are NULL (the
-      scheduler does not retain SQL text per job);
-    - *pg_locks*, *pg_stat_replication*: typed empty views — Spark holds no
-      row locks and has no WAL replicas; lock/lag packets run and correctly
-      report nothing.
-    """
-    dbs = [(_oid(d.name), d.name, 0, 0) for d in spark.catalog.listDatabases()]
-    spark.createDataFrame(
-        dbs, "oid bigint, datname string, datfrozenxid bigint, datminmxid bigint"
-    ).createOrReplaceTempView("pg_database")
-
+def _settings_rows(snap: CatalogSnapshot) -> list[tuple]:
+    """The session's SQL confs (``SET -v``) — name/setting/unit/boot_val
+    shaped; byte-valued Spark confs get unit='B'."""
+    spark = snap.spark
     set_rows = []
     for r in spark.sql("SET -v").collect():
         name, value = r[0], r[1]
@@ -380,11 +375,12 @@ def create_pg_instance_views(spark: SparkSession) -> None:
             "synthetic: Spark task-slot count (defaultParallelism)",
         )
     )
-    spark.createDataFrame(
-        set_rows,
-        "name string, setting string, unit string, boot_val string, short_desc string",
-    ).createOrReplaceTempView("pg_settings")
+    return set_rows
 
+
+def _activity_rows(snap: CatalogSnapshot) -> list[tuple]:
+    """One row per active Spark job from the status tracker."""
+    spark = snap.spark
     act_rows = []
     try:
         tracker = spark.sparkContext.statusTracker()
@@ -402,24 +398,244 @@ def create_pg_instance_views(spark: SparkSession) -> None:
             )
     except Exception:  # noqa: BLE001 — tracker unavailable on some backends
         pass
-    _ACT_SCHEMA = (
+    return act_rows
+
+
+# ------------------------------------------------------------- registry
+
+# Every emulated relation: name → (schema, rows of a snapshot).
+_VIEWS = {
+    "pg_namespace": ("oid bigint, nspname string", lambda s: s.namespaces),
+    "pg_class": (
+        "oid bigint, relname string, relnamespace bigint, relkind string,"
+        " reltuples double, relpages bigint, reloptions array<string>,"
+        " relam bigint, reltoastrelid bigint, relhasindex boolean,"
+        # frozen-xid ages are identically 0: parquet is copy-on-write, no
+        # MVCC wraparound exists, so age-based alerts correctly never fire
+        " relfrozenxid bigint, relminmxid bigint",
+        lambda s: s.rows.cls,
+    ),
+    "pg_attribute": (
+        "attrelid bigint, attname string, attnum int, atttypid string,"
+        # parquet never carries dropped-column tombstones
+        " attisdropped boolean",
+        lambda s: s.rows.att,
+    ),
+    "pg_type": (
+        "oid string, typname string",
+        lambda s: [(t, t) for t in sorted({r[3] for r in s.rows.att})] or [("text", "text")],
+    ),
+    "pg_stat_all_tables": (
+        "relid bigint, schemaname string, relname string, n_live_tup bigint,"
+        " n_dead_tup bigint, n_tup_ins bigint, n_tup_upd bigint, n_tup_hot_upd bigint,"
+        " seq_scan bigint, seq_tup_read bigint, idx_scan bigint, idx_tup_fetch bigint,"
+        " last_vacuum timestamp, last_autovacuum timestamp,"
+        " last_analyze timestamp, last_autoanalyze timestamp",
+        lambda s: s.rows.stat,
+    ),
+    "pg_stat_all_indexes": (
+        "indexrelid bigint, relid bigint, idx_scan bigint",
+        lambda s: [(r[0], r[1], 0) for r in s.rows.idx],
+    ),
+    # user-relations variant: identical here (no system catalogs on disk)
+    "pg_stat_user_indexes": (
+        "indexrelid bigint, relid bigint, idx_scan bigint",
+        lambda s: [(r[0], r[1], 0) for r in s.rows.idx],
+    ),
+    # `indkey` is the int2vector itself (ARRAY — PG's `= any(indkey)` and
+    # 0-based `indkey[n]` subscripts work verbatim); `indkey_str` keeps the
+    # PG ::text rendering ('1 2'); `indkey_arr` is the legacy port alias.
+    "pg_index": (
+        "indexrelid bigint, indrelid bigint, indnatts int, indkey_arr array<int>,"
+        " indkey array<int>, indkey_str string, indisunique boolean,"
+        " indisprimary boolean, indisvalid boolean, indisready boolean",
+        lambda s: s.rows.idx,
+    ),
+    "pg_am": (
+        "oid bigint, amname string",
+        lambda s: [(_oid(m), m) for m in ("btree", "hash", "gist", "gin", "brin")],
+    ),
+    # No PK/FK/unique constraints exist on parquet tables — typed empty view
+    # so constraint-reading packets (dba_idx_diag 03/06) run and report none.
+    "pg_constraint": (
+        "oid bigint, conname string, contype string, connamespace bigint,"
+        " conindid bigint, conrelid bigint, confrelid bigint,"
+        " conkey array<int>, confkey array<int>,"
+        " confupdtype string, confdeltype string",
+        lambda s: [],
+    ),
+    "pg_stats": (
+        "schemaname string, tablename string, attname string, inherited boolean,"
+        " null_frac double, avg_width int, n_distinct double",
+        lambda s: s.pg_stats_rows,
+    ),
+    # the PG-dialect rewriter maps information_schema.columns onto this
+    "information_schema_columns": (
+        "table_schema string, table_name string, column_name string,"
+        " data_type string, ordinal_position int",
+        lambda s: s.rows.info_columns,
+    ),
+    # instance views: frozen-xid ages are 0 (no wraparound on parquet)
+    "pg_database": (
+        "oid bigint, datname string, datfrozenxid bigint, datminmxid bigint",
+        lambda s: [(_oid(d.name), d.name, 0, 0) for d in s.spark.catalog.listDatabases()],
+    ),
+    "pg_settings": (
+        "name string, setting string, unit string, boot_val string, short_desc string",
+        _settings_rows,
+    ),
+    "pg_stat_activity": (
         "pid int, datname string, usename string, application_name string,"
         " state string, query string, backend_xid bigint, backend_xmin bigint,"
         " xact_start timestamp, state_change timestamp, wait_event_type string,"
-        " wait_event string, client_addr string"
-    )
-    spark.createDataFrame(act_rows or [], _ACT_SCHEMA).createOrReplaceTempView(
-        "pg_stat_activity"
-    )
-    spark.createDataFrame(
-        [],
+        " wait_event string, client_addr string",
+        _activity_rows,
+    ),
+    # Spark holds no row locks and has no WAL replicas: typed empty views,
+    # lock/lag packets run and correctly report nothing
+    "pg_locks": (
         "locktype string, database bigint, relation bigint, page int, tuple int,"
         " virtualxid string, transactionid bigint, classid bigint, objid bigint,"
         " objsubid int, pid int, granted boolean",
-    ).createOrReplaceTempView("pg_locks")
-    spark.createDataFrame(
-        [],
+        lambda s: [],
+    ),
+    "pg_stat_replication": (
         "pid int, client_addr string, sent_lsn string, write_lsn string,"
         " flush_lsn string, replay_lsn string",
-    ).createOrReplaceTempView("pg_stat_replication")
-    spark.udf.register("pg_backend_pid", lambda: -1, "int")
+        lambda s: [],
+    ),
+}
+
+
+def _indexdef(s: CatalogSnapshot):
+    indexdefs = s.rows.indexdefs
+    return lambda oid: indexdefs.get(oid)
+
+
+def _relation_size(s: CatalogSnapshot):
+    relsizes = s.rows.relsizes
+    return lambda oid: relsizes.get(oid, 0)
+
+
+def _indexes_size(s: CatalogSnapshot):
+    idx_sizes = s.rows.idx_size_by_table
+    return lambda oid: idx_sizes.get(oid, 0)
+
+
+def _total_relation_size(s: CatalogSnapshot):
+    relsizes, idx_sizes = s.rows.relsizes, s.rows.idx_size_by_table
+    return lambda oid: relsizes.get(oid, 0) + idx_sizes.get(oid, 0)
+
+
+# Lookup UDFs: name → (return type, snapshot → function). Each closes over
+# a plain dict built from the snapshot — the dict ships to the Python
+# workers with the function, no driver round-trip per row.
+_UDFS = {
+    "pg_get_indexdef": ("string", _indexdef),
+    "pg_relation_size": ("bigint", _relation_size),
+    "pg_table_size": ("bigint", _relation_size),
+    "pg_indexes_size": ("bigint", _indexes_size),
+    "pg_total_relation_size": ("bigint", _total_relation_size),
+    # no constraints exist on parquet tables — NULL, like PG for unknown oid
+    "pg_get_constraintdef": ("string", lambda s: lambda oid: None),
+    "pg_backend_pid": ("int", lambda s: lambda: -1),
+}
+
+EMULATED_NAMES = frozenset(_VIEWS) | frozenset(_UDFS)
+_INSTANCE_NAMES = frozenset(
+    ("pg_database", "pg_settings", "pg_stat_activity", "pg_locks",
+     "pg_stat_replication", "pg_backend_pid")
+)
+_PG_CATALOG_NAMES = EMULATED_NAMES - _INSTANCE_NAMES - {"information_schema_columns"}
+
+_WORD_RE = re.compile(r"\w+")
+_INFO_COLUMNS_RE = re.compile(r"\binformation_schema\s*\.\s*columns\b", re.I)
+
+
+def names_in(sql: str, known: frozenset[str]) -> set[str]:
+    """The ``known`` names ``sql`` mentions (case-insensitive; PG's
+    ``information_schema.columns`` counts as ``information_schema_columns``).
+    A superset of what actually runs is harmless — it only builds more."""
+    words = set(_WORD_RE.findall(sql.lower()))
+    if _INFO_COLUMNS_RE.search(sql):
+        words.add("information_schema_columns")
+    return words & known
+
+
+@cache
+def _struct(ddl: str) -> StructType:
+    return StructType.fromDDL(ddl)
+
+
+def _arrow_column(values: list, arrow_type: pa.DataType) -> pa.Array:
+    if pa.types.is_timestamp(arrow_type):
+        # naive datetimes are local wall time, as in createDataFrame(list)
+        values = [v.astimezone() if v is not None and v.tzinfo is None else v for v in values]
+    return pa.array(values, type=arrow_type)
+
+
+def _register_view(spark: SparkSession, name: str, ddl: str, rows: list) -> None:
+    """``rows`` as temp view ``name``. Handed over through Arrow, small
+    data becomes a LocalRelation: queries over the emulation are planned
+    and folded in the driver instead of scheduling jobs that scan a
+    parallelized RDD."""
+    struct = _struct(ddl)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [_arrow_column(list(c), f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    spark.createDataFrame(table, struct).createOrReplaceTempView(name)
+
+
+def build_views(spark: SparkSession, snap: CatalogSnapshot, names) -> None:
+    """Register the emulated relations (temp views) and lookup UDFs in
+    ``names`` from ``snap``."""
+    for name in sorted(names):
+        if name in _VIEWS:
+            ddl, rows = _VIEWS[name]
+            _register_view(spark, name, ddl, rows(snap))
+        else:
+            rtype, make = _UDFS[name]
+            spark.udf.register(name, make(snap), rtype)
+
+
+def refresh_emulation(spark: SparkSession, db: str, names=None) -> None:
+    """Build the emulation over ``db`` from one fresh snapshot: only the
+    relations and lookup UDFs in ``names``, or all of them when None."""
+    wanted = EMULATED_NAMES if names is None else EMULATED_NAMES & set(names)
+    build_views(spark, CatalogSnapshot(spark, [db]), wanted)
+
+
+def create_pg_catalog_views(spark: SparkSession, dbs: list[str] | None = None) -> None:
+    """(Re)build the pg_catalog temp views over ``dbs`` (default: the
+    session's current database). Call again after DDL to refresh — PG's
+    catalog is live, these views are a snapshot (documented gap).
+
+    Also registers metadata-lookup SQL functions the packets call with oids
+    (``pg_get_indexdef``, ``pg_relation_size``, ``pg_table_size``) — each
+    closes over a dict built here; catalogs are driver-side metadata, the
+    lookups never touch executors with more than a broadcast-size map."""
+    dbs = dbs or [spark.catalog.currentDatabase()]
+    build_views(spark, CatalogSnapshot(spark, dbs), _PG_CATALOG_NAMES)
+
+
+def create_pg_instance_views(spark: SparkSession) -> None:
+    """Instance-level introspection views: pg_database / pg_settings /
+    pg_stat_activity / pg_locks / pg_stat_replication.
+
+    Mappings (shape parity; each gap is structural, not an omission):
+
+    - *pg_database*: Spark catalog databases; frozen-xid ages are 0 —
+      parquet has no wraparound, so age-based alerts correctly never fire;
+    - *pg_settings*: the session's SQL confs (``SET -v``) — name/setting/
+      unit/boot_val shaped; byte-valued Spark confs get unit='B';
+    - *pg_stat_activity*: one row per active Spark job from the status
+      tracker — pid=jobId, state='active'; queries/xids are NULL (the
+      scheduler does not retain SQL text per job);
+    - *pg_locks*, *pg_stat_replication*: typed empty views — Spark holds no
+      row locks and has no WAL replicas; lock/lag packets run and correctly
+      report nothing.
+    """
+    build_views(spark, CatalogSnapshot(spark, []), _INSTANCE_NAMES)

@@ -116,21 +116,20 @@ class RunContext:
         self.messages.append((severity.upper(), message))
         self.current_step_results.append([severity.upper(), message])
 
-    def refresh_catalog(self) -> None:
-        """Rebuild the pg_catalog / information_schema emulation views from
-        the live Spark catalog. PG's catalog is transactionally live; the
-        emulation is a snapshot — py-steps that create tables and then
-        introspect them call this in between."""
-        from db_converter_spark.catalog import create_information_schema_views
-        from db_converter_spark.pg_catalog import (
-            create_pg_catalog_views,
-            create_pg_instance_views,
-        )
+    def refresh_catalog(self, names: set[str] | None = None) -> None:
+        """Rebuild the pg_catalog / information_schema emulation from one
+        fresh snapshot of the live Spark catalog. PG's catalog is
+        transactionally live; the emulation is a snapshot — py-steps that
+        create tables and then introspect them call this in between.
+        ``names`` limits the build to those emulated relations and lookup
+        UDFs (the runner passes what the packet's SQL mentions); None
+        builds everything."""
+        from db_converter_spark.pg_catalog import refresh_emulation
 
-        create_pg_catalog_views(self.spark, [self.db_name])
-        create_pg_instance_views(self.spark)
-        create_information_schema_views(self.spark, self.db_name)
-        if self.tracker is not None:
+        refresh_emulation(self.spark, self.db_name, names)
+        if self.tracker is not None and (
+            names is None or "pg_get_serial_sequence" in names
+        ):
             # pg_get_serial_sequence resolves against this target's recorded
             # ALTER SEQUENCE ... OWNED BY state (snapshot, like the other
             # catalog lookup UDFs)
@@ -143,6 +142,22 @@ class RunContext:
     def execute(self, sql: str) -> list:
         """Run one statement, capture like the engine does; for py-steps."""
         return _run_statement(self, sql)
+
+
+def _catalog_names(pkt: Packet) -> set[str] | None:
+    """The catalog-emulation names a PG-dialect packet's SQL mentions (steps,
+    run_once, generators) — all a refresh needs to build. None (build
+    everything) when a py step makes the packet's SQL unknowable."""
+    from db_converter_spark.pg_catalog import EMULATED_NAMES, names_in
+
+    steps = ([pkt.run_once] if pkt.run_once else []) + pkt.steps
+    if any(step.kind == "py" for step in steps):
+        return None
+    texts = [step.text for step in steps]
+    texts += [*pkt.gen_obj.values(), *pkt.gen_nsp.values()]
+    return names_in(
+        "\n".join(texts), EMULATED_NAMES | {"pg_get_serial_sequence", "dbc_packets"}
+    )
 
 
 def _capture_select(ctx: RunContext, df) -> list:
@@ -1021,6 +1036,7 @@ class PacketRunner:
             packet_id = tracker.upsert_packet(pkt.name, pkt.packet_hash, pkt.meta) if track else -1
 
             ctx = RunContext(session, db, pkt, read_only)
+            catalog_names = None
             if track:
                 ctx.tracker = tracker  # sequence counters share the ledger
             ctx.no_commit = ptype == PacketType.NO_COMMIT
@@ -1047,15 +1063,17 @@ class PacketRunner:
                 from db_converter_spark.functions import register_pg_compat
 
                 register_pg_compat(session)
-                ctx.refresh_catalog()
-                # Live ledger snapshot as the dbc_packets view — reference
-                # packets introspect their own ledger row (reference:
-                # packets/test_insert_delete_select/01_step.sql)
-                session.createDataFrame(
-                    tracker.dump_packets() or [],
-                    "id bigint, name string, status string, dt string,"
-                    " packet_hash string, meta_data string",
-                ).createOrReplaceTempView("dbc_packets")
+                catalog_names = _catalog_names(pkt)
+                ctx.refresh_catalog(catalog_names)
+                if catalog_names is None or "dbc_packets" in catalog_names:
+                    # Live ledger snapshot as the dbc_packets view — reference
+                    # packets introspect their own ledger row (reference:
+                    # packets/test_insert_delete_select/01_step.sql)
+                    session.createDataFrame(
+                        tracker.dump_packets() or [],
+                        "id bigint, name string, status string, dt string,"
+                        " packet_hash string, meta_data string",
+                    ).createOrReplaceTempView("dbc_packets")
             data: dict[str, list] = {}
             status = PacketStatus.DONE
 
@@ -1150,7 +1168,7 @@ class PacketRunner:
                     if ctx.dialect == "postgres":
                         # run_once DDL changed the catalog; re-snapshot the
                         # emulation views before generators query them
-                        ctx.refresh_catalog()
+                        ctx.refresh_catalog(catalog_names)
                     if not gen_cache:
                         # evaluate generators once run_once completed
                         gen_cache.update(self._eval_generators(session, pkt))

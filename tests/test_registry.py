@@ -162,3 +162,13 @@ def test_query_fingerprint_is_deterministic():
     all_queries()
     for n in ("dd01_dedup_exact", "pipe05_corpus_build", "ev10_session_window_stream"):
         assert query_fingerprint(n) == query_fingerprint(n)
+
+
+def test_steal_delta_keeps_sentinel():
+    """A failed /proc/stat read at either end reports -1, never a
+    difference taken against the sentinel."""
+    from db_converter_spark.benchutil import steal_delta
+
+    assert steal_delta(100, 130) == 30
+    assert steal_delta(-1, 130) == -1
+    assert steal_delta(100, -1) == -1

@@ -390,3 +390,39 @@ def test_insert_default_values(ret_ctx):
     ctx.execute("INSERT INTO dv DEFAULT VALUES")
     spark.catalog.refreshTable("retdb.dv")
     assert sorted(r.id for r in spark.table("retdb.dv").collect()) == [7, 8]
+
+
+def test_update_keeps_quoted_default(ret_ctx):
+    """UPDATE swap-writes the table and re-applies its properties; a
+    recorded ``nextval('…')`` default holds quotes and must survive it,
+    with no swap sibling left behind."""
+    ctx, spark = ret_ctx, ret_ctx.spark
+    spark.sql("DROP TABLE IF EXISTS retdb.qd")
+    spark.sql("CREATE TABLE retdb.qd (id BIGINT, name STRING) USING parquet")
+    ctx.execute("CREATE SEQUENCE qd_seq START WITH 5")
+    ctx.execute("ALTER TABLE qd ALTER COLUMN id SET DEFAULT nextval('qd_seq')")
+    ctx.execute("INSERT INTO qd(name) VALUES ('a')")
+    assert ctx.execute("UPDATE qd SET name = 'b' WHERE id = 5") == [["UPDATE", 1]]
+    props = {r.key: r.value for r in spark.sql("SHOW TBLPROPERTIES retdb.qd").collect()}
+    assert props["dbc.default.id"] == "nextval('qd_seq')"
+    ctx.execute("INSERT INTO qd(name) VALUES ('c')")
+    spark.catalog.refreshTable("retdb.qd")
+    assert sorted(tuple(r) for r in spark.table("retdb.qd").collect()) == [
+        (5, "b"), (6, "c"),
+    ]
+    assert not [t.name for t in spark.catalog.listTables("retdb") if "__swap" in t.name]
+
+
+def test_swap_write_failure_drops_sibling(ret_ctx):
+    """A rewrite that fails before the rename leaves the table as it was
+    and no ``__swap_tmp`` table in the catalog."""
+    from db_converter_spark.operators.migration import _swap_write
+
+    spark = ret_ctx.spark
+    spark.sql("DROP TABLE IF EXISTS retdb.sw")
+    spark.sql("CREATE TABLE retdb.sw USING parquet AS SELECT 1 AS k")
+    bad = spark.sql("SELECT CAST(raise_error('boom') AS INT) AS k FROM range(1)")
+    with pytest.raises(Exception, match="boom"):
+        _swap_write(spark, "retdb.sw", bad)
+    assert [tuple(r) for r in spark.table("retdb.sw").collect()] == [(1,)]
+    assert not [t.name for t in spark.catalog.listTables("retdb") if "__swap" in t.name]
